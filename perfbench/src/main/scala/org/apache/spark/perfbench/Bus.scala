@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus drain, which Spark keeps package-private:
+  * metrics read from a listener are complete only once every event
+  * posted so far has been delivered.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
